@@ -213,10 +213,7 @@ object FuzzGen {
     val outDir = args.lift(1).getOrElse("target/fuzz/sf0.01")
     val seed = args.lift(2).map(_.toLong).getOrElse(1337L)
     val skew = args.lift(3).contains("skew")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.configure(
-      SparkSession.builder().master(s"local[$cpus]"), cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.forMain()
     fuzzAll(spark, srcDir, outDir, seed, skew)
     spark.stop()
   }

@@ -47,11 +47,23 @@ object GraftSession {
     * the selection operators re-execute bit-identically. Suites share
     * one JVM/SparkContext, so the knob lives here, not per-spec.
     */
-  def local(appName: String = "graft"): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.max(2, Runtime.getRuntime.availableProcessors()).toString)
+  def local(appName: String = "graft"): SparkSession =
+    build(appName, s"local[$cpus, 2]")
+
+  /** Session for the standalone mains (Bench, Verify, PlanDump,
+    * FuzzGen, CanaryGen): the same defaults as [[local]], but master
+    * `local[n]` — one task attempt, so a task failure fails the run
+    * loudly instead of being retried away.
+    */
+  def forMain(): SparkSession = build("graft", s"local[$cpus]")
+
+  /** Core count: `SPARK_GRAFT_CPUS`, else this machine's (at least 2). */
+  private val cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    math.max(2, Runtime.getRuntime.availableProcessors()).toString)
+
+  private def build(appName: String, master: String): SparkSession = {
     val spark = configure(
-      SparkSession.builder().appName(appName).master(s"local[$cpus, 2]"), cpus)
+      SparkSession.builder().appName(appName).master(master), cpus)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

@@ -4,8 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.GenerateExec
 import org.apache.spark.sql.execution.joins._
 
-/** Whole-registry join-strategy audit (builder-side main, like
-  * [[ScaleRehearsal]]): for every batch gate, print the physical
+/** Whole-registry join-strategy audit (a dev main, not library
+  * surface): for every batch gate, print the physical
   * join inventory and flag any `BroadcastHashJoin` whose BUILD side
   * contains a `Generate` — the round-4 failure signature, where
   * explode-derived lineage defeats Catalyst's size estimation and a

@@ -17,7 +17,7 @@ import org.apache.spark.storage.StorageLevel
   * accumulated one MEMORY_AND_DISK entry per corpus.
   *
   * Every such persist now registers here, and run entry points
-  * (Verify, Bench, ScaleRehearsal, test suites) call [[releaseAll]]
+  * (Verify, Bench, test suites) call [[releaseAll]]
   * at their run boundary — intra-run sharing is preserved, nothing
   * outlives the run. Library users embedding these operators own the
   * same handle: call [[releaseAll]] whenever a corpus sweep ends

@@ -486,9 +486,7 @@ object CorpusPrep {
     * the returned table then has fewer than `rounds` rows.
     */
   /** The deep trainer's capped dictionary pull — ONE distributed
-    * word-count + a ≤ dictCap-row collect (shared with
-    * [[graft.BpeDepthBench]] so the measured collect cost is the
-    * gated path's own). */
+    * word-count + a ≤ dictCap-row collect. */
   def bpeDictCollect(docs: DataFrame,
       dictCap: Int = BpeDictCap): Array[(String, Long)] =
     warnIfDictCapped(bpeWordDict(docs)
@@ -542,15 +540,6 @@ object CorpusPrep {
       .map { case ((w, wc), syms) => (w, wc, syms.toIndexedSeq) }
       .toDF("word", "wc", "syms")
   }
-
-  /** The deep merge loop on an ALREADY-COLLECTED dictionary — exposed
-    * so [[graft.BpeDepthBench]] can time the driver loop directly
-    * inside one run (differencing two runs understates the re-run's
-    * warmed collect and skews rounds_per_sec, the one number the
-    * bench exists to report). */
-  def bpeDeepMerges(dictRows: Array[(String, Long)], rounds: Int)
-      : Seq[(Int, String, String, Long)] =
-    bpeDeepLoop(dictRows, rounds)._1
 
   /** The driver-side merge loop shared by [[bpeTrainDeep]] (wants the
     * merge table) and [[bpeTrainDeepDict]] (wants the final words
@@ -927,19 +916,11 @@ object CorpusPrep {
       .groupBy(col("word"))
       .agg(map_from_entries(collect_list(struct(col("key"), col("cost"))))
         .as("m"))
-    // CPU-dense fold over byte-tiny rows: exempt it from AQE's
-    // byte-proportional coalescing (the wordPieceEncodeWith r15
-    // rationale — A/B'd: unigram family 22.5 → 19.2 s across 9
-    // gates). Width = the SESSION's shuffle-partition knob, not the
-    // core count, so streaming replays (which deliberately run
-    // micro-batches narrow) are not widened per batch. Applied on
-    // THIS per-word path only: the EM-loss path's fold frame is
-    // (word, excluded-piece)-keyed — a word-keyed fan-out there
-    // measured 1.3× (fewer distinct keys + an extra exchange of a
-    // larger frame), so it keeps the planner's partitioning.
-    viterbiFold(words.join(probes, Seq("word"))
-        .repartition(words.sparkSession.sessionState.conf.numShufflePartitions,
-          col("word")))
+    // No fan-out repartition before the fold: the join output already
+    // carries HashPartitioning(word, session width), so
+    // EnsureRequirements would remove a `repartition(width, word)`
+    // here (OPTIMIZATION_r16.md, "Findings recorded").
+    viterbiFold(words.join(probes, Seq("word")))
       .select(col("word"), col("wc"), col("total_cost"), col("n_pieces"),
         col("n_best"), col("path"))
   }
@@ -1478,11 +1459,10 @@ object CorpusPrep {
       .agg(map_from_entries(collect_list(struct(col("key"), col("cost"))))
         .as("m"))
     words.join(maps, Seq("word"))
-      // NO fan-out repartition here (r15 measured): unlike
-      // viterbiFold, the n-best fold feeds Window.partitionBy("word")
-      // consumers — a same-window A/B of the extra exchange read
-      // flat-to-regressive, so the k-best path keeps the planner's
-      // partitioning
+      // NO fan-out repartition here (r15 measured): the n-best fold
+      // feeds Window.partitionBy("word") consumers — a same-window A/B
+      // of the extra exchange read flat-to-regressive, so the k-best
+      // path keeps the planner's partitioning
       .withColumn("dp", aggregate(
         sequence(lit(1), length(col("word"))),
         array(array(struct(lit(0L).as("cost"), lit(0).as("np"),
@@ -2236,18 +2216,11 @@ object CorpusPrep {
     // artifact-read frame the static planner guessed probes small
     // and broadcast it — the PlanAudit failure signature; the
     // in-lineage path already planned SMJ here)
-    // explicit fan-out before the DP projection (r15): the greedy
-    // fold below is CPU-per-word, but its input is tiny in BYTES, so
-    // AQE's byte-proportional coalescing squeezed the stage onto 2
-    // post-shuffle partitions (profiled: a ~2 s-of-CPU 2-task
-    // straggler at sf0.1). A user-specified hash repartition is
-    // exempt from AQE coalescing and spreads the fold across the
-    // session's cores (same-window A/B: bert encode 3.49 → 2.50 s);
-    // at scale the exchange moves dict-sized rows — noise next to
-    // the fold it parallelizes.
+    // No fan-out repartition before the greedy fold: the merge join's
+    // output already carries HashPartitioning(word, session width), so
+    // EnsureRequirements would remove a `repartition(width, word)`
+    // here (OPTIMIZATION_r16.md, "Findings recorded").
     val stepped = words.join(probes.hint("merge"), Seq("word"), "left")
-      .repartition(words.sparkSession.sessionState.conf.numShufflePartitions,
-        col("word"))
       .withColumn("st", aggregate(
         sequence(lit(1), len),
         struct(lit(1).as("pos"), lit(0).as("np"), lit("").as("path"),
@@ -2465,9 +2438,9 @@ object CorpusPrep {
     (merges.toSeq, words)
   }
 
-  /** The deep merge loop on an ALREADY-COLLECTED dictionary — the
-    * [[bpeDeepMerges]] seam, exposed so [[graft.BpeDepthBench]] can
-    * time the driver loop directly inside one run. */
+  /** The deep merge loop on an ALREADY-COLLECTED dictionary
+    * (CorpusPrepSpec reads round 1's argmax from it to pin
+    * re-pricing). */
   def wordPieceDeepMerges(dictRows: Array[(String, Long)], rounds: Int)
       : Seq[(Int, String, String, Long, Long, Long, Long)] =
     wordPieceDeepLoop(dictRows, rounds)._1

@@ -35,8 +35,8 @@ import graft.sources.Tables
   *
   * Both are identity rewrites (same distinct pair / count semantics),
   * so the DuckDB oracles are unchanged; equality with the plain forms
-  * is property-tested in GraphOpsSpec and the hot-key behavior is
-  * measured in [[graft.ScaleRehearsal]].
+  * is property-tested in GraphOpsSpec, which also drives a synthetic
+  * hot minute through both forms.
   */
 object GraphOps {
 
@@ -63,8 +63,7 @@ object GraphOps {
       targetSubBlock)
 
   /** [[coActivityEdges]] over a prepared DISTINCT (m, user_id) frame —
-    * the synthetic-activity entry point for [[graft.ScaleRehearsal]]'s
-    * hot-minute case.
+    * the entry point for synthetic activity, such as one hot minute.
     */
   def coActivityEdgesOf(act0: DataFrame, targetSubBlock: Int = 1024): DataFrame = {
     val spark = act0.sparkSession
@@ -149,8 +148,7 @@ object GraphOps {
       maxUsersPerMinute, targetSubBlock)
 
   /** [[coActivityEdgesCapped]] over a prepared DISTINCT (m, user_id)
-    * frame — the synthetic-activity entry point for tests and
-    * [[graft.ScaleRehearsal]].
+    * frame — the synthetic-activity entry point for tests.
     */
   def coActivityEdgesCappedOf(act: DataFrame, maxUsersPerMinute: Int,
       targetSubBlock: Int = 1024): DataFrame =

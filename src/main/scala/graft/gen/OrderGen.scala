@@ -56,10 +56,14 @@ object OrderGen {
       .select(to_json(struct(col("*"))).as("value"))
 
   /** Schema-on-read decode of the wire form (`from_json`), mirroring
-    * the Flink table's `'format' = 'json'` (`doc/temp.md:310`).
+    * the Flink table's `'format' = 'json'` (`doc/temp.md:310`) and its
+    * computed event-time column `ts`. `value` may be STRING (text
+    * queue) or BINARY (a Kafka record's value); the cast is a no-op
+    * Catalyst removes on string input.
     */
   def decodeJson(wire: DataFrame): DataFrame =
-    wire.select(from_json(col("value"), graft.model.Schemas.orderSchema).as("o"))
+    wire.select(from_json(col("value").cast("string"),
+        graft.model.Schemas.orderSchema).as("o"))
       .select(col("o.*"))
       .withColumn("ts", timestamp_seconds(col("order_time")))
 

@@ -112,7 +112,8 @@ object Connectors {
   /** Kafka streaming source (`doc/temp.md:293-312`): value bytes →
     * JSON decode with the declared schema. The returned builder is
     * ready to `.load()` where a broker exists; offline tests use
-    * [[kafkaWireDecode]] on any DataFrame with a `value` column.
+    * [[graft.gen.OrderGen.decodeJson]] on any DataFrame with a
+    * `value` column.
     *
     * Live-broker status: this sandbox ships neither the
     * `spark-sql-kafka` connector jar nor a broker (zero egress), so
@@ -121,9 +122,9 @@ object Connectors {
     * micro-batches carrying the connector's exact output relation
     * (binary key/value, topic, partition, offset, timestamp,
     * timestampType) through the same `select(value)` →
-    * [[kafkaWireDecode]] chain [[wireStream]]'s kafka case uses after
-    * `.load()`. A deployment adds the connector jar and broker
-    * coordinates; no code changes.
+    * [[graft.gen.OrderGen.decodeJson]] chain [[wireStream]]'s kafka
+    * case uses after `.load()`. A deployment adds the connector jar
+    * and broker coordinates; no code changes.
     */
   def kafkaSourceReader(spark: SparkSession, bootstrap: String, topic: String,
       startingOffsets: String = "earliest") =
@@ -131,20 +132,6 @@ object Connectors {
       .option("kafka.bootstrap.servers", bootstrap)
       .option("subscribe", topic)
       .option("startingOffsets", startingOffsets)
-
-  /** The wire decode every Kafka consumer applies: bytes → string →
-    * `from_json` with the order schema + event-time column + watermark
-    * (the Flink DDL's computed column + watermark,
-    * `doc/temp.md:301-303`).
-    */
-  def kafkaWireDecode(wire: DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions._
-    wire.select(from_json(col("value").cast("string"),
-        graft.model.Schemas.orderSchema).as("o"))
-      .select(col("o.*"))
-      .withColumn("ts", timestamp_seconds(col("order_time")))
-      .withWatermark("ts", "5 seconds")
-  }
 
   /** Configured wire source — the single point where deployment shape
     * enters the consume chain. Every variant presents the wire as a
@@ -172,13 +159,16 @@ object Connectors {
   }
 
   /** The whole consumer entry — [[wireStream]] (config-selected
-    * source) composed with [[kafkaWireDecode]] (declared decode +
-    * event time + watermark). StreamingSpec's e2e runs THIS with
+    * source) composed with [[graft.gen.OrderGen.decodeJson]]
+    * (declared decode + event-time column). No watermark: the
+    * event-time queries ([[graft.streaming.StreamingQueries]] Q1/Q2)
+    * declare their own, and Spark rejects a redefined watermark when
+    * the query starts. StreamingSpec's e2e runs THIS with
     * `format=text`; a production deployment passes broker
     * coordinates and nothing else changes.
     */
   def consumeOrders(spark: SparkSession, cfg: Map[String, String]): DataFrame =
-    kafkaWireDecode(wireStream(spark, cfg))
+    graft.gen.OrderGen.decodeJson(wireStream(spark, cfg))
 
   // ---------------------------------------------------- Hive-style ORC
 

@@ -69,7 +69,7 @@ class ConnectorsSpec extends AnyFunSuite {
 
   test("kafka wire decode: generated JSON orders round-trip through the consumer path") {
     val wire = OrderGen.ordersJson(spark, 500)
-    val decoded = Connectors.kafkaWireDecode(wire)
+    val decoded = OrderGen.decodeJson(wire)
     assert(decoded.count() === 500)
     assert(decoded.columns.toSet ===
       Set("order_id", "user_id", "order_tz", "amount", "currency", "channel_id", "order_time", "ts"))
@@ -82,10 +82,10 @@ class ConnectorsSpec extends AnyFunSuite {
     // branch in this sandbox (no spark-sql-kafka jar, no broker, zero
     // egress): a real micro-batch stream whose rows carry the
     // connector's exact output schema — binary value included — driven
-    // through the SAME `select(value) → kafkaWireDecode` chain the
+    // through the SAME `select(value) → decodeJson` chain the
     // kafka case uses after `.load()`. Closes the one branch the
     // format=text e2e could not reach: BINARY value → cast(string) →
-    // from_json under a streaming watermark.
+    // from_json in a stream.
     import spark.implicits._
     import org.apache.spark.sql.types._
     implicit val sqlCtx = spark.sqlContext
@@ -104,7 +104,7 @@ class ConnectorsSpec extends AnyFunSuite {
       "timestamp" -> TimestampType, "timestampType" -> IntegerType)
     assert(in.toDF().schema.fields.map(f => f.name -> f.dataType).toSeq
       === kafkaConnectorSchema)
-    val decoded = Connectors.kafkaWireDecode(in.toDF().select(col("value")))
+    val decoded = OrderGen.decodeJson(in.toDF().select(col("value")))
     val q = decoded.writeStream.format("memory")
       .queryName("kafka_wire_schema_decode").outputMode("append").start()
     in.addData(wire.take(150)); q.processAllAvailable()

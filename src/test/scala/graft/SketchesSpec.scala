@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -133,18 +133,16 @@ class SketchesSpec extends AnyFunSuite {
 
   test("observe() metrics ride the job: counts match a separate audit pass") {
     val ev = Tables.events(spark, dir)
-    val (written, metricsRow) = graft.ops.Observe.withMetrics(
-      ev, "audit", Seq(count(lit(1)).as("n_rows"),
+    val obs = Observation("audit")
+    val written = ev.observe(obs, count(lit(1)).as("n_rows"),
         sum(when(col("value") < 0, 1).otherwise(0)).as("n_negative"),
-        max(col("ts")).as("max_ts"))) { instrumented =>
-      instrumented.filter(col("event_type") === "purchase").count()
-    }
-    assert(metricsRow.isDefined, "observation must surface via the listener")
-    val m = metricsRow.get
+        max(col("ts")).as("max_ts"))
+      .filter(col("event_type") === "purchase").count()
+    val m = obs.get
     // the observation sees ALL rows (it sits above the scan, before
     // the filter the action applies) — equal to a separate audit scan
-    assert(m.getAs[Long]("n_rows") === ev.count())
-    assert(m.getAs[Long]("n_negative") === ev.filter(col("value") < 0).count())
+    assert(m("n_rows") === ev.count())
+    assert(m("n_negative") === ev.filter(col("value") < 0).count())
     assert(written === ev.filter(col("event_type") === "purchase").count())
   }
 

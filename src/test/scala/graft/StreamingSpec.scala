@@ -176,7 +176,7 @@ class StreamingSpec extends AnyFunSuite {
     // JSON wire values land as text-queue files (what a Kafka value
     // column carries, format="text" — the zero-egress stand-in; a
     // live broker is the same call with format="kafka" + URLs),
-    // through the declared decode, watermarked channel aggregation,
+    // through the declared decode, channel aggregation,
     // and the executor-side JDBC upsert — the composed pipeline, not
     // its pieces.
     val wire = graft.gen.OrderGen.ordersJson(spark, 2000)
@@ -206,6 +206,59 @@ class StreamingSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), (r.getLong(1), r.getLong(2)))).toMap
     assert(streamed === batch)
     assert(streamed.nonEmpty)
+  }
+
+  test("consumeOrders feeds the event-time queries: q2 closed windows and q1 daily UV equal batch") {
+    import spark.implicits._
+    // q2PerMinute and q1DailyUv declare their own watermark on `ts`;
+    // the consumer chain must not declare one too (Spark rejects a
+    // redefined watermark when the query starts)
+    val n = 2000
+    val wire = graft.gen.OrderGen.ordersJson(spark, n)
+      .select(col("value")).as[String].collect().toSeq
+    val queueDir = java.nio.file.Files.createTempDirectory("graft_wire_evtime")
+    val stageDir = java.nio.file.Files.createTempDirectory("graft_wire_stage")
+    def consume() = graft.sources.Connectors.consumeOrders(spark,
+      Map("format" -> "text", "path" -> queueDir.toString))
+    val q2 = StreamingQueries.q2PerMinute(consume())
+      .writeStream.outputMode("append")
+      .format("memory").queryName("consume_q2_out").start()
+    val uvSink = new UpsertSink(Seq("date_str"))
+    val qUv = uvSink.writeTo(
+      StreamingQueries.q1DailyUv(consume()).writeStream.outputMode("update"))
+    wire.grouped(700).zipWithIndex.foreach { case (chunk, i) =>
+      // staged then moved, so a micro-batch never lists a half-written file
+      val staged = stageDir.resolve(f"chunk_$i%05d.jsonl")
+      java.nio.file.Files.write(staged,
+        chunk.mkString("", "\n", "\n").getBytes("UTF-8"))
+      java.nio.file.Files.move(staged, queueDir.resolve(staged.getFileName),
+        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      q2.processAllAvailable(); qUv.processAllAvailable()
+    }
+    q2.stop(); qUv.stop()
+
+    val orders = graft.gen.OrderGen.orders(spark, n)
+      .withColumn("ts", timestamp_seconds(col("order_time")))
+    // the watermark after the last chunk: a window is closed (and
+    // emitted in append mode) once it ends at or before it
+    val wm = orders.agg(max(col("order_time"))).head().getLong(0) - 5L
+    val closed = orders.groupBy(window(col("ts"), "1 minute"))
+      .agg(count(lit(1)).as("buy_cnt"))
+      .filter(unix_seconds(col("window.end")) <= wm)
+      .select(date_format(col("window.start"), "yyyy-MM-dd HH:mm"), col("buy_cnt"))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val streamedQ2 = spark.table("consume_q2_out").collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(closed.size > 10)
+    assert(streamedQ2 === closed)
+
+    val batchUv = orders
+      .groupBy(date_format(col("ts"), "yyyy-MM-dd").as("date_str"))
+      .agg(countDistinct(col("user_id")).as("uv"))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val streamedUv = uvSink.snapshot.map { case (k, r) =>
+      k.head.asInstanceOf[String] -> r.getAs[Long]("uv") }
+    assert(streamedUv === batchUv)
   }
 
   test("append+flush session replay equals the complete-mode replay") {

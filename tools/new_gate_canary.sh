@@ -40,7 +40,8 @@ if [ ! -f "$OUT/.complete" ]; then
 fi
 
 bench() {
-  SPARK_GRAFT_ONLY="$GATES" SPARK_GRAFT_CPUS=32 SPARK_GRAFT_SF_DIR="$1" \
+  SPARK_GRAFT_ONLY="$GATES" SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-$(nproc)}" \
+    SPARK_GRAFT_SF_DIR="$1" \
     sbt -batch "runMain graft.Bench" 2>/dev/null | grep '"queries"'
 }
 
