@@ -246,10 +246,6 @@ object Similarity {
     if (centroids.isEmpty) return emb.sparkSession.emptyDataFrame
       .select(lit(0L).as("id_a"), lit(0L).as("id_b"), lit(0.0).as("sim"))
       .limit(0)
-    // dimensionality comes from the DATA — a fixed parameter would
-    // silently compute cluster angles on a projection (voiding the
-    // recall guarantee) whenever real vectors are wider
-    val dim = centroids(0)._2.length
 
     // one native k×d sweep — NOT array(vec_dot×k), whose plan size and
     // generated code scale with k (see [[graft.functions.CentroidScores]]);
@@ -261,14 +257,10 @@ object Similarity {
     def clusterCol = graft.functions.ArgMaxDouble.arg_max_double(col("__scores"))
 
     for (_ <- 0 until lloydIters) {
-      val means = prepped.withColumn("__scores", scoresCol)
-        .withColumn("cluster", clusterCol)
-        .groupBy(col("cluster"))
-        .agg(array((0 until dim).map(d =>
-          avg(element_at(col("u"), d + 1))): _*).as("centroid"))
-        .collect().map(r => (r.getInt(0), normalize(r.getSeq[Double](1))))
-      val byId = means.toMap
-      centroids = centroids.map { case (i, c) => (i, byId.getOrElse(i, c)) }
+      val byId = clusterMeans(prepped.withColumn("__scores", scoresCol)
+        .withColumn("cluster", clusterCol), "u")
+      centroids = centroids.map { case (i, c) =>
+        (i, byId.get(i).map(normalize).getOrElse(c)) }
     }
 
     // Persisted like `prepped` (r15): the k×d scoring sweep is the
@@ -374,7 +366,7 @@ object Similarity {
     *
     * Coarse quantizer: deterministic seeded centroids refined by a
     * few Lloyd iterations expressed AS DATAFRAME AGGREGATIONS (assign
-    * = broadcast-centroid argmin map; update = groupBy(cluster) mean)
+    * = broadcast-centroid argmin map; update = groupBy(cluster, d) mean)
     * — no driver-side loops over data, only over the handful of
     * centroids collected per iteration (k × dim doubles, inherently
     * tiny). Probe: each query scans its `nprobe` nearest clusters
@@ -502,21 +494,24 @@ object Similarity {
     emb.select(col("vec_id"),
       transform(col("embedding"), v => v.cast("double")).as("e"))
 
-  /** argmin over squared distance ⇔ argmax of (2·dot − ‖c‖²);
-    * reads the `__scores` column a prior ivfScored(...) projection
-    * added (native one-pass argmax — see
-    * [[graft.functions.ArgMaxDouble]]). */
+  /** argmin over squared distance ⇔ argmax of the `__scores` column
+    * a prior [[ivfScored]] projection added (native one-pass argmax —
+    * see [[graft.functions.ArgMaxDouble]]). */
   private def nearestClusterFromScores =
     graft.functions.ArgMaxDouble.arg_max_double(col("__scores"))
 
+  /** `__scores`: per centroid, dot(e ⊕ 1, c ⊕ −‖c‖²/2) = dot(e, c) −
+    * ‖c‖²/2 — the augmented form of [[pqCodeCol]], in ONE native k×d
+    * sweep, so the plan stays O(1) in k (see
+    * [[graft.functions.CentroidScores]]). Each score is exactly half
+    * of 2·dot(e, c) − ‖c‖² (scaling by 2 is exact in binary floating
+    * point), so the argmax — argmin ‖e − c‖² — and the probe order
+    * match that form bit for bit. */
   private def ivfScored(centroids: Array[(Int, Seq[Double])],
       df: DataFrame, e: Column): DataFrame = {
-    import graft.functions.VecDot.vec_dot
-    val scores = centroids.map { case (_, c) =>
-      val c2 = c.map(x => x * x).sum
-      vec_dot(e, typedlit(c)) * 2.0 - lit(c2)
-    }
-    df.withColumn("__scores", array(scores: _*))
+    val aug = centroids.map { case (_, c) => c :+ (-c.map(x => x * x).sum / 2) }.toSeq
+    df.withColumn("__scores", graft.functions.CentroidScores.centroid_scores(
+      concat(e, array(lit(1.0))), typedlit(aug)))
   }
 
   /** `nClusters = 0` ⇒ size the quantizer to the corpus:
@@ -560,31 +555,36 @@ object Similarity {
     var centroids: Array[(Int, Seq[Double])] = train
       .orderBy(col("vec_id")).limit(k).collect()
       .zipWithIndex.map { case (r, i) => (i, r.getSeq[Double](1)) }
-    // dimensionality from the data, not a parameter (see
-    // [[cosineNearDupPairs]])
-    val dim = if (centroids.isEmpty) 0 else centroids(0)._2.length
-    // empty corpus ⇒ empty model: the Lloyd rounds would otherwise
-    // build a zero-arm score array (array<null>, analysis error)
+    // empty corpus ⇒ empty model, no Lloyd jobs
     if (centroids.isEmpty) return centroids
     for (_ <- 0 until lloydIters) {
-      val assigned = ivfScored(centroids, train, col("e"))
-        .withColumn("cluster", nearestClusterFromScores)
-      val means = assigned.groupBy(col("cluster"))
-        .agg(array((0 until dim).map(d =>
-          avg(element_at(col("e"), d + 1))): _*).as("centroid"))
-        .collect().map(r => (r.getInt(0), r.getSeq[Double](1)))
+      val byId = clusterMeans(ivfScored(centroids, train, col("e"))
+        .withColumn("cluster", nearestClusterFromScores), "e")
       // keep old centroid for any emptied cluster
-      val byId = means.toMap
       centroids = centroids.map { case (i, c) => (i, byId.getOrElse(i, c)) }
     }
     centroids
   }
 
+  /** Lloyd update: the per-cluster mean of the array column `vec` over
+    * a frame carrying `cluster`, assembled on the driver (k × d
+    * doubles). The means run as ONE `(cluster, d)` aggregate over
+    * `posexplode(vec)` — a two-field buffer at any d, where
+    * `array(d × avg(element_at(vec, i)))` carries 2·d fields and past
+    * `spark.sql.codegen.maxFields` (d > 50) drops both HashAggregates
+    * out of whole-stage codegen. Each (cluster, d) sum adds the same
+    * rows in the same order as the per-dimension form, so the means
+    * are bit-identical. Dimensionality comes from the data. */
+  private def clusterMeans(assigned: DataFrame, vec: String): Map[Int, Seq[Double]] =
+    assigned.select(col("cluster"), posexplode(col(vec)).as(Seq("d", "x")))
+      .groupBy(col("cluster"), col("d")).agg(avg(col("x")))
+      .collect().groupBy(_.getInt(0)).map { case (c, rows) =>
+        c -> rows.sortBy(_.getInt(1)).map(_.getDouble(2)).toSeq }
+
   /** Assign a corpus to frozen centroids: the write-once bucketed
     * index state `(neighbor_id, e_c, cluster)`. An EMPTY model (zero
-    * training vectors) assigns nothing — guarded because a zero-arm
-    * `array()` of scores types as array<null> and fails analysis, not
-    * execution. */
+    * training vectors) assigns nothing — guarded because the argmax of
+    * zero scores is -1, not a cluster. */
   def ivfAssignCorpus(centroids: Array[(Int, Seq[Double])],
       emb: DataFrame): DataFrame =
     if (centroids.isEmpty)
@@ -602,15 +602,13 @@ object Similarity {
       nProbe: Int = 4): DataFrame = {
     val qPrepped = queries.select(col("vec_id").as("query_id"),
       transform(col("embedding"), v => v.cast("double")).as("e_q"))
-    if (centroids.isEmpty)
-      return qPrepped.filter(lit(false)).withColumn("cluster", lit(0))
+    // an empty model scores to an empty array, so no probes
     ivfScored(centroids, qPrepped, col("e_q"))
       .select(col("query_id"), col("e_q"),
         posexplode(slice(array_sort(
           // sort (score, cluster) descending by score via negated score
-          array(centroids.indices.map(i =>
-            struct((element_at(col("__scores"), i + 1) * -1.0).as("ns"),
-              lit(i).as("cluster"))): _*)), 1, nProbe))
+          transform(col("__scores"), (x, i) =>
+            struct((x * -1.0).as("ns"), i.as("cluster")))), 1, nProbe))
           .as(Seq("p", "probe")))
       .select(col("query_id"), col("e_q"), col("probe.cluster").as("cluster"))
   }
@@ -659,10 +657,10 @@ object Similarity {
         // ADC scan: lookup-adds over codes, no full vectors touched
         val w = Window.partitionBy(col("query_id"))
           .orderBy(col("approx_cos").desc, col("neighbor_id"))
-        // qTables is queries × (m·kSub doubles): broadcast holds
-        // through the PqMaxDriverQueries contract (~4k queries ≈ 4 MB)
-        // and well past it; a query batch too big to broadcast should
-        // be chunked by the caller — the scan is queries × corpus work
+        // qTables is queries × (m·kSub doubles), ~1 KB per query at
+        // the defaults: broadcast holds to tens of thousands of
+        // queries; a query batch too big to broadcast should be
+        // chunked by the caller — the scan is queries × corpus work
         // by definition, and chunking keeps each pass broadcast-shaped
         val cand = codes.join(broadcast(qTables),
             col("query_id") =!= col("neighbor_id"))
@@ -723,22 +721,14 @@ object Similarity {
     val codes = corpus.select(col("vec_id").as("neighbor_id"),
       pqCodesCol(books, m, dSub).as("codes"))
 
-    // per-query lookup tables — dispatch on query-batch size:
-    //  ≤ [[PqMaxDriverQueries]]: driver-built (the gate contract —
-    //  a handful of broadcast queries; unchanged path, shared with
-    //  the sim_ann_pq oracle aux). Above: the SAME tables as one
-    //  distributed centroid_scores projection per sub-space — the
-    //  codebook is a tiny foldable literal (m × kSub × dSub doubles),
-    //  so a 100k-query batch never funnels through the driver.
-    //  Branch equality is unit-tested on fixed codebooks (ExtSpec)
-    //  and the distributed branch rehearsed at 100k queries
-    //  (BASELINE.md, `pq_tables_100k_queries`).
-    val qNorm = withNorm(queries, "query_id", "e_q", "n_q")
-    val probe = qNorm.limit(PqMaxDriverQueries + 1).collect()
-    val qTables =
-      if (probe.length <= PqMaxDriverQueries)
-        pqDotTablesDriver(spark, probe.toSeq, books, m, dSub)
-      else pqDotTablesDistributed(qNorm, books, m, dSub)
+    // per-query lookup tables at any batch size: one distributed
+    // centroid_scores projection per sub-space against the tiny
+    // foldable codebook literal (m × kSub × dSub doubles) — no query
+    // ever funnels through the driver (rehearsed at 100k queries,
+    // BASELINE.md `pq_tables_100k_queries`; values pinned on fixed
+    // codebooks in ExtSpec)
+    val qTables = pqDotTablesDistributed(
+      withNorm(queries, "query_id", "e_q", "n_q"), books, m, dSub)
     val normTable = (0 until m).map(s =>
       books(s).map(c => c.map(x => x * x).sum).toSeq).toSeq
     Some((codes, qTables, normTable))
@@ -849,14 +839,10 @@ object Similarity {
         .withColumn("q_dot_c", vec_dot(col("e_q"),
           element_at(typedlit(centroidSeq), col("cluster") + 1)))
         .select(col("query_id"), col("cluster"), col("q_dot_c"))
-      // per-query ADC tables over the RESIDUAL books — same
-      // size-dispatch as [[pqModel]]
-      val qNorm = withNorm(queries, "query_id", "e_q", "n_q")
-      val probe = qNorm.limit(PqMaxDriverQueries + 1).collect()
-      val qTables =
-        if (probe.length <= PqMaxDriverQueries)
-          pqDotTablesDriver(spark, probe.toSeq, books, m, dSub)
-        else pqDotTablesDistributed(qNorm, books, m, dSub)
+      // per-query ADC tables over the RESIDUAL books, built as in
+      // [[pqModel]]
+      val qTables = pqDotTablesDistributed(
+        withNorm(queries, "query_id", "e_q", "n_q"), books, m, dSub)
       (codes, probes, qTables)
     }
   }
@@ -892,32 +878,12 @@ object Similarity {
     }
   }
 
-  /** Contract bound for driver-built per-query ADC tables: below it
-    * the collect costs less than a job launch; above it [[pqModel]]
-    * builds the identical tables distributed.
-    */
-  val PqMaxDriverQueries = 4096
-
-  /** Driver-side ADC table build over collected query rows
-    * `(query_id, e_q, n_q)` — the small-batch branch.
-    */
-  private[graft] def pqDotTablesDriver(spark: SparkSession,
-      qRows: Seq[org.apache.spark.sql.Row],
-      books: Array[Array[Seq[Double]]], m: Int, dSub: Int): DataFrame = {
-    import spark.implicits._
-    qRows.map { r =>
-      val (qid, q, nq) = (r.getLong(0), r.getSeq[Double](1), r.getDouble(2))
-      (qid, nq, (0 until m).map(s => books(s).map(c =>
-        c.zip(q.slice(s * dSub, (s + 1) * dSub)).map { case (a, b) => a * b }.sum
-      ).toSeq).toSeq)
-    }.toDF("query_id", "n_q", "dot_table")
-  }
-
-  /** Distributed ADC table build: per sub-space, one
+  /** Per-query ADC tables `(query_id, n_q, dot_table)` over
+    * `(query_id, e_q, n_q)`: per sub-space, one
     * [[graft.functions.CentroidScores]] sweep of the query sub-vector
-    * against the (foldable-literal) codebook — bit-identical to the
-    * driver fold (same sequential accumulation order), as a narrow
-    * codegen projection over the query frame.
+    * against the (foldable-literal) codebook — a sequential left-to-
+    * right sum per cell, as a narrow codegen projection over the
+    * query frame.
     */
   private[graft] def pqDotTablesDistributed(qNorm: DataFrame,
       books: Array[Array[Seq[Double]]], m: Int, dSub: Int): DataFrame = {

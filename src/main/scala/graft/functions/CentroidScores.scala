@@ -49,14 +49,20 @@ case class CentroidScores(left: Expression, right: Expression)
 
 object CentroidScores {
 
-  /** One k×d dot-product sweep (called from generated code). */
+  /** One k×d dot-product sweep (called from generated code), each a
+    * sequential left-to-right sum like [[VecDot.dot]]; a centroid
+    * whose dimension differs from `u`'s fails loudly, as there. */
   def scores(u: ArrayData, cents: ArrayData): ArrayData = {
     val k = cents.numElements()
+    val d = u.numElements()
     val out = new Array[Double](k)
     var j = 0
     while (j < k) {
       val c = cents.getArray(j)
       val n = c.numElements()
+      if (n != d)
+        throw new IllegalArgumentException(
+          s"centroid_scores: mismatched vector dimensions $d vs $n")
       var acc = 0.0
       var i = 0
       while (i < n) {

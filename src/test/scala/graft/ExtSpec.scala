@@ -193,6 +193,104 @@ class ExtSpec extends AnyFunSuite {
       s"incremental IVF found $hits/${brute.size} true top-1 neighbors")
   }
 
+  /** The IVF quantizer in its earlier formulation, kept here as the
+    * bit-parity reference: one `vec_dot` arm per centroid scoring
+    * 2·dot(e, c) − ‖c‖², and one `avg(element_at(e, d))` per dimension
+    * in the Lloyd update. */
+  private object IvfReference {
+    import graft.functions.ArgMaxDouble.arg_max_double
+    import graft.functions.VecDot.vec_dot
+    type Model = Array[(Int, Seq[Double])]
+
+    private def corpus(emb: org.apache.spark.sql.DataFrame) =
+      emb.select(col("vec_id"),
+        transform(col("embedding"), v => v.cast("double")).as("e"))
+
+    private def scored(cents: Model, df: org.apache.spark.sql.DataFrame,
+        e: org.apache.spark.sql.Column) =
+      df.withColumn("__scores", array(cents.map { case (_, c) =>
+        vec_dot(e, typedlit(c)) * 2.0 - lit(c.map(x => x * x).sum) }: _*))
+
+    def train(emb: org.apache.spark.sql.DataFrame, k: Int, iters: Int): Model = {
+      val c = corpus(emb)
+      var cents: Model = c.orderBy(col("vec_id")).limit(k).collect()
+        .zipWithIndex.map { case (r, i) => (i, r.getSeq[Double](1)) }
+      val dim = cents(0)._2.length
+      for (_ <- 0 until iters) {
+        val means = scored(cents, c, col("e"))
+          .withColumn("cluster", arg_max_double(col("__scores")))
+          .groupBy(col("cluster"))
+          .agg(array((0 until dim).map(d =>
+            avg(element_at(col("e"), d + 1))): _*).as("centroid"))
+          .collect().map(r => (r.getInt(0), r.getSeq[Double](1))).toMap
+        cents = cents.map { case (i, v) => (i, means.getOrElse(i, v)) }
+      }
+      cents
+    }
+
+    def assign(cents: Model, emb: org.apache.spark.sql.DataFrame) =
+      scored(cents, corpus(emb), col("e"))
+        .select(col("vec_id").as("neighbor_id"),
+          arg_max_double(col("__scores")).as("cluster"))
+
+    def probes(cents: Model, queries: org.apache.spark.sql.DataFrame, nProbe: Int) =
+      scored(cents, corpus(queries).withColumnRenamed("vec_id", "query_id"), col("e"))
+        .select(col("query_id"), posexplode(slice(array_sort(
+          array(cents.indices.map(i =>
+            struct((element_at(col("__scores"), i + 1) * -1.0).as("ns"),
+              lit(i).as("cluster"))): _*)), 1, nProbe)).as(Seq("p", "probe")))
+        .select(col("query_id"), col("probe.cluster").as("cluster"))
+  }
+
+  /** Assert the shipped quantizer equals [[IvfReference]] bit for bit
+    * on `emb` with `k` centroids; returns the trained model. */
+  private def assertIvfBitParity(emb: org.apache.spark.sql.DataFrame, k: Int,
+      iters: Int): IvfReference.Model = {
+    def bits(m: IvfReference.Model) =
+      m.toSeq.map { case (i, c) => (i, c.map(java.lang.Double.doubleToRawLongBits)) }
+    def pairs(df: org.apache.spark.sql.DataFrame, a: String) =
+      df.select(col(a), col("cluster")).collect()
+        .map(r => (r.getLong(0), r.getInt(1))).toSeq
+    val model = Similarity.ivfTrain(emb, k, iters)
+    val ref = IvfReference.train(emb, k, iters)
+    assert(model.length === k)
+    assert(bits(model) === bits(ref), "ivfTrain centroids drifted from the reference")
+    assert(pairs(Similarity.ivfAssignCorpus(model, emb), "neighbor_id").sortBy(_._1) ===
+      pairs(IvfReference.assign(ref, emb), "neighbor_id").sortBy(_._1))
+    // probe lists in probe order, per query
+    assert(pairs(Similarity.ivfProbes(model, emb, nProbe = 4), "query_id") ===
+      pairs(IvfReference.probes(ref, emb, 4), "query_id"))
+    model
+  }
+
+  test("IVF quantizer: centroids, assignments and probe lists are bit-identical " +
+      "to the per-centroid vec_dot / per-dimension avg formulation") {
+    val emb = Tables.embeddings(spark, "/root/testdata/sf0.01")
+    // the auto-sized quantizer (√N) the gates train, plus a wider one
+    val auto = math.max(16, math.ceil(math.sqrt(emb.count().toDouble)).toInt)
+    assert(Similarity.ivfTrain(emb).length === auto)
+    assertIvfBitParity(emb, auto, iters = 2)
+    assertIvfBitParity(emb, 64, iters = 2)
+  }
+
+  test("IVF quantizer: an emptied cluster keeps its old centroid, bit-identical " +
+      "to the reference") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(11)
+    val vecs = Seq.fill(40)(Seq.fill(8)(rnd.nextGaussian().toFloat))
+    // ids 0 and 1 (two of the three seeds) share one vector: every
+    // score ties between clusters 0 and 1, the argmax takes the first,
+    // so cluster 1 has no members after the first assignment
+    val emb = vecs.zipWithIndex
+      .map { case (v, i) => (i.toLong, if (i == 1) vecs.head else v, 0) }
+      .toDF("vec_id", "embedding", "label")
+    val seed1 = vecs.head.map(_.toDouble)
+    val one = assertIvfBitParity(emb, 3, iters = 1)
+    assert(one(1)._2 === seed1, "emptied cluster 1 must keep its seed")
+    assert(one(0)._2 !== seed1, "cluster 0 must have moved to its members' mean")
+    assertIvfBitParity(emb, 3, iters = 2)
+  }
+
   test("multimodal feature extraction is deterministic and metadata prunes payload") {
     import spark.implicits._
     val media = Multimodal.mediaTable(spark, dir).as[Multimodal.MediaRow]
@@ -606,6 +704,14 @@ class ExtSpec extends AnyFunSuite {
     // corrupt/mixed-dim embeddings must error (as the oracle's
     // list_cosine_similarity does), not return a truncated similarity
     assert(e.getMessage != null)
+    // so does centroid_scores, the IVF quantizer's scoring kernel —
+    // here with the row vector the LONGER one, which a loop over the
+    // centroid's length would silently truncate
+    val e2 = intercept[Exception] {
+      df.select(graft.functions.CentroidScores.centroid_scores(
+        col("b"), array(col("a")))).collect()
+    }
+    assert(e2.getMessage.contains("mismatched vector dimensions"))
     val ok = Seq((Seq(1.0, 2.0), Seq(3.0, 4.0))).toDF("a", "b")
       .select(graft.functions.VecDot.vec_dot(col("a"), col("b"))).collect()
     assert(ok(0).getDouble(0) === 11.0)
@@ -1050,11 +1156,11 @@ class ExtSpec extends AnyFunSuite {
     assert(plainLeaks > 0, "fixture has no straddling clusters; control is vacuous")
   }
 
-  test("PQ ADC tables: distributed build equals driver build on fixed codebooks") {
+  test("PQ ADC tables: exact sub-space dots on fixed codebooks") {
     import spark.implicits._
-    // fixed codebooks — no training, so this pins the two dispatch
-    // branches of pqModel's table build against each other with no
-    // bet on Lloyd determinism: m=2 sub-spaces, kSub=3, dSub=2
+    // fixed codebooks — no training, so this pins pqModel's table
+    // build with no bet on Lloyd determinism: m=2 sub-spaces, kSub=3,
+    // dSub=2
     val books: Array[Array[Seq[Double]]] = Array(
       Array(Seq(1.0, 2.0), Seq(0.5, -1.0), Seq(0.0, 0.25)),
       Array(Seq(-3.0, 0.125), Seq(7.0, 2.5), Seq(1.5, -0.75)))
@@ -1067,13 +1173,12 @@ class ExtSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getDouble(1),
         r.getSeq[scala.collection.Seq[Double]](2).map(_.toSeq)))
       .sortBy(_._1).toSeq
-    val viaDriver = Similarity.pqDotTablesDriver(
-      spark, qNorm.collect().toSeq, books, m = 2, dSub = 2)
-    val viaDistributed = Similarity.pqDotTablesDistributed(
-      qNorm, books, m = 2, dSub = 2)
-    assert(canon(viaDriver) === canon(viaDistributed))
-    // and the values are the actual sub-space dot products
-    val t10 = canon(viaDriver).head._3
+    val tables = canon(Similarity.pqDotTablesDistributed(
+      qNorm, books, m = 2, dSub = 2))
+    assert(tables.map(t => (t._1, t._2)) ===
+      Seq((10L, 0.5477), (11L, 2.6458), (12L, 0.0)))
+    // the values are the actual sub-space dot products
+    val t10 = tables.head._3
     assert(t10(0) === Seq(0.1 * 1.0 + -0.2 * 2.0, 0.1 * 0.5 + -0.2 * -1.0,
       0.1 * 0.0 + -0.2 * 0.25))
     assert(t10(1) === Seq(0.3 * -3.0 + 0.4 * 0.125, 0.3 * 7.0 + 0.4 * 2.5,

@@ -121,6 +121,72 @@ class PlansSpec extends AnyFunSuite {
     assert(!plan.contains("LessThan(ts,-"), s"wrapped negative bound pushed:\n$plan")
   }
 
+  test("IVF quantizer: Lloyd-update aggregates stay in whole-stage codegen; " +
+      "assignment is one centroid_scores call at any k") {
+    import org.apache.spark.sql.execution.{InputAdapter, SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    val emb = Tables.embeddings(spark, dir)
+
+    // HashAggregates outside a codegen stage: a node is inside one when
+    // its nearest WholeStageCodegen/InputAdapter ancestor is the former
+    def interpreted(p: SparkPlan, inStage: Boolean): Seq[HashAggregateExec] = p match {
+      case w: WholeStageCodegenExec => interpreted(w.child, inStage = true)
+      case a: InputAdapter => interpreted(a.child, inStage = false)
+      case h: HashAggregateExec =>
+        (if (inStage) Seq.empty else Seq(h)) ++ interpreted(h.child, inStage)
+      case other => other.children.flatMap(interpreted(_, inStage))
+    }
+    def isLloydUpdate(p: SparkPlan) = p.collect {
+      case h: HashAggregateExec
+          if h.groupingExpressions.exists(_.references.exists(_.name == "cluster")) => h
+    }.nonEmpty
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    // defined before the tests whose operators also aggregate by
+    // `cluster`, so no late event of theirs lands in this listener
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    // static plans: AQE's root hides the stage tree from a plain walk
+    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark.listenerManager.register(listener)
+    try {
+      graft.ext.Similarity.ivfTrain(emb, nClusters = 16, lloydIters = 2)
+      // listener events arrive asynchronously
+      eventually(timeout(60.seconds)) {
+        assert(plans.toArray(Array.empty[SparkPlan]).count(isLloydUpdate) === 2)
+      }
+      for (p <- plans.toArray(Array.empty[SparkPlan]) if isLloydUpdate(p)) {
+        assert(p.collect { case h: HashAggregateExec => h }.size >= 2,
+          s"expected a partial and a final aggregate:\n$p")
+        assert(interpreted(p, inStage = false).isEmpty,
+          s"Lloyd update aggregates left whole-stage codegen:\n$p")
+      }
+    } finally {
+      spark.listenerManager.unregister(listener)
+      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+    }
+
+    // assignment plan size does not grow with k
+    for (k <- Seq(16, 64)) {
+      val cents = Array.tabulate(k)(i => (i, Seq.tabulate(64)(d => (i * 64 + d).toDouble)))
+      val exprs = graft.ext.Similarity.ivfAssignCorpus(cents, emb)
+        .queryExecution.optimizedPlan.flatMap(_.expressions)
+      val nScores = exprs.map(_.collect {
+        case c: graft.functions.CentroidScores => c }.size).sum
+      val nDots = exprs.map(_.collect {
+        case v: graft.functions.VecDot => v }.size).sum
+      assert(nScores === 1 && nDots === 0,
+        s"k=$k: $nScores centroid_scores, $nDots vec_dot")
+    }
+  }
+
   test("cosine near-dup plan is an equi-join on cluster keys, not an all-pairs join") {
     val emb = Tables.embeddings(spark, dir)
     val plan = graft.ext.Similarity.cosineNearDupPairs(emb, 0.4)
